@@ -1,10 +1,13 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+
+import graft.llm.Dedup
 
 /** The reference's ETL service tick, end-to-end (etl_job.py:64-132,
   * SURVEY §3.1): extract (pluggable fetch, retried with linear
-  * backoff) → parse JSON → transform (empty-guard, validate, rename,
+  * backoff) → parse JSON → transform (validate, empty-guard, rename,
   * lenient cast, tz-normalize) → within-batch fact dedup → insert-only
   * -new dim upsert → sink appends. One [[runOnce]] call = one
   * 10-minute tick of the reference's loop (dags/youbike_dag.py:135);
@@ -14,9 +17,11 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *
   * Scale posture: the batch is map-side until the dedup shuffle on the
   * warehouse unique key; the dim upsert anti-joins against a broadcast
-  * of existing keys. The warehouse boundary is the pluggable [[Sinks]]
-  * (JDBC in the reference via loaders/Readers.appendJdbc; parquet at
-  * cluster scale; in-memory collectors in EtlJobSpec).
+  * of existing keys. Each sink frame is counted on the job that
+  * materializes it, and freed once its sink returns. The warehouse
+  * boundary is the pluggable [[Sinks]] (JDBC in the reference via
+  * loaders/Readers.appendJdbc; parquet at cluster scale; in-memory
+  * collectors in EtlJobSpec).
   */
 object EtlJob {
 
@@ -44,17 +49,25 @@ object EtlJob {
     val raw = IngestBatch.parseJson(spark, records)
     val (dim, fact) = IngestBatch.transform(raw)
 
-    val facts = IngestBatch.dedupFacts(fact).cache()
-    val nFacts = facts.count() // materializes once; the sink write reuses it
-    sinks.appendFacts(facts)
-    facts.unpersist()
+    // counted on the checkpoint job; the sink write reads the checkpoint
+    val (facts, nFacts) = checkpointCounted(IngestBatch.dedupFacts(fact))
+    try sinks.appendFacts(facts)
+    finally Dedup.releaseCheckpoint(facts)
 
-    val newDims = IngestBatch
-      .newDimsOnly(dim, sinks.existingDimKeys(), "station_no").cache()
-    val nDims = newDims.count()
-    if (nDims > 0) sinks.insertDims(newDims)
-    newDims.unpersist()
+    val (newDims, nDims) = checkpointCounted(
+      IngestBatch.newDimsOnly(dim, sinks.existingDimKeys(), "station_no"))
+    try if (nDims > 0) sinks.insertDims(newDims)
+    finally Dedup.releaseCheckpoint(newDims)
 
     BatchResult(nFacts, nDims)
+  }
+
+  /** Eager local checkpoint of `df` with its row count observed on the
+    * materialization job. The caller frees it with
+    * [[Dedup.releaseCheckpoint]]. */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val ckpt = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
+    (ckpt, obs.get("n").asInstanceOf[Long])
   }
 }

@@ -65,10 +65,18 @@ object IngestBatch {
   def lenientInt(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     c.try_cast("int")
 
-  /** Transform stage (etl_job.py:83-111): returns (dim, fact). */
+  /** Transform stage (etl_job.py:83-111): returns (dim, fact). `raw`
+    * is a JSON-inferred frame ([[parseJson]]): a schema holding every
+    * required column came from at least one record, so the emptiness
+    * probe (a job) runs only when validation fails, where an empty
+    * extract still raises [[EmptyBatchException]]. */
   def transform(raw: DataFrame): (DataFrame, DataFrame) = {
-    requireNonEmpty(raw, "station snapshot")
-    validate(raw, RequiredInfo ++ RequiredStatus.drop(1))
+    try validate(raw, RequiredInfo ++ RequiredStatus.drop(1))
+    catch {
+      case e: MissingColumnsException =>
+        requireNonEmpty(raw, "station snapshot")
+        throw e
+    }
     val dim = raw
       .select(
         col("sno").cast("string").as("station_no"),
@@ -87,9 +95,11 @@ object IngestBatch {
     (dim, fact)
   }
 
-  /** J4: insert-only-new dim rows (etl_job.py:121-125). */
+  /** J4: insert-only-new dim rows (etl_job.py:121-125). Duplicate
+    * keys on the broadcast side cannot change a left-anti result, so
+    * the existing keys go in as they are, without a distinct shuffle. */
   def newDimsOnly(incoming: DataFrame, existing: DataFrame, key: String): DataFrame =
-    incoming.join(broadcast(existing.select(key).distinct()), Seq(key), "left_anti")
+    incoming.join(broadcast(existing.select(key)), Seq(key), "left_anti")
 
   /** S8 batch analog: drop replays on the warehouse unique key before
     * append (sql/init_schema.sql:17). */

@@ -10,8 +10,10 @@ object Retry {
     * attempt` sleeps between failures; rethrows the last error. Only
     * non-fatal errors are retried — OutOfMemoryError and friends
     * propagate immediately, and an interrupt during the backoff sleep
-    * aborts the loop with the flag restored. */
+    * aborts the loop with the flag restored. `attempts` must be at
+    * least 1. */
   def withBackoff[T](attempts: Int = 3, backoffMs: Long = 2000)(fetch: => T): T = {
+    require(attempts >= 1, s"attempts must be >= 1, got $attempts")
     var last: Throwable = null
     var i = 1
     while (i <= attempts) {

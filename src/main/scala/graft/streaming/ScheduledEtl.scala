@@ -36,9 +36,10 @@ import graft.ingest.EtlJob
   * plainly: a crash BETWEEN the sink writes and `commit(batchId)`
   * still replays that tick — close it by making the warehouse write
   * and the marker one transaction (JDBC), or by keying warehouse rows
-  * on (batch_id, unique key) with insert-or-ignore — the
-  * dedup-on-conflict sink (S8, IngestBatch.appendDeduped) is the
-  * batch-side building block.
+  * on (batch_id, unique key) with insert-or-ignore — the batch-side
+  * building blocks are [[graft.ingest.IngestBatch.dedupFacts]] (S8,
+  * replays within a batch) plus a left-anti join of the batch on the
+  * stored `(station_no, record_time)` keys in the fact sink.
   *
   * Scale posture: the tick stream is one row per trigger — all real
   * work happens inside runOnce's plan, which is map-side until the

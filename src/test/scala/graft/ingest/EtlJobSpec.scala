@@ -1,7 +1,5 @@
 package graft.ingest
 
-import org.apache.spark.sql.DataFrame
-
 import graft.SparkSpec
 
 /** End-to-end contract of the ETL service tick, mirroring the
@@ -70,5 +68,33 @@ class EtlJobSpec extends SparkSpec {
     val r = EtlJob.runOnce(spark,
       () => Seq(record("s1", q = "\"N/A\"")).toDS(), sink.sinks)
     assert(r.factsAppended === 1)
+  }
+
+  test("runOnce frees its checkpoints, also when a sink throws") {
+    val sc = spark.sparkContext
+    def pinned = sc.getPersistentRDDs.keySet.toSet
+    val before = pinned
+    val sink = new MemSink
+    assert(EtlJob.runOnce(spark,
+      () => Seq(record("s1"), record("s2")).toDS(), sink.sinks) === EtlJob.BatchResult(2, 2))
+    assert(pinned === before)
+    val failing = sink.sinks.copy(appendFacts = _ => throw new IllegalStateException("warehouse down"))
+    intercept[IllegalStateException] {
+      EtlJob.runOnce(spark, () => Seq(record("s3")).toDS(), failing)
+    }
+    assert(pinned === before)
+  }
+
+  test("runOnce job count: no separate count or emptiness-probe job") {
+    val sink = new MemSink
+    EtlJob.runOnce(spark, () => Seq(record("s1"), record("s2")).toDS(), sink.sinks)
+    // schema inference 1; facts: dedup stage + checkpoint 2, sink 1;
+    // dims: existing-key broadcast 1, dedup stage + checkpoint 2, sink 1
+    val jobs = jobsOf {
+      assert(EtlJob.runOnce(spark, () => Seq(record("s1", t = "2025-12-10 15:10:00"),
+        record("s2", t = "2025-12-10 15:10:00"), record("s3")).toDS(),
+        sink.sinks) === EtlJob.BatchResult(3, 1))
+    }
+    assert(jobs === 8)
   }
 }

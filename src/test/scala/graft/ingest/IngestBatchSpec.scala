@@ -73,4 +73,20 @@ class IngestBatchSpec extends SparkSpec {
       .select("station_no").as[String].collect().toSet
     assert(out === Set("a", "c"))
   }
+
+  test("transform: an empty extract raises EmptyBatch; an empty record raises MissingColumns") {
+    assertThrows[IngestBatch.EmptyBatchException](
+      IngestBatch.transform(IngestBatch.parseJson(spark, spark.emptyDataset[String])))
+    val e = intercept[IngestBatch.MissingColumnsException](
+      IngestBatch.transform(IngestBatch.parseJson(spark, Seq("{}").toDS())))
+    assert(e.missing.toSet === (IngestBatch.RequiredInfo ++ IngestBatch.RequiredStatus).toSet)
+  }
+
+  test("anti-join upsert is unchanged by duplicated existing keys") {
+    val incoming = Seq(("a", 1), ("b", 2), ("c", 3)).toDF("station_no", "x")
+    val existing = Seq(("b", 99), ("b", 98), ("c", 1), ("c", 1)).toDF("station_no", "y")
+    val out = IngestBatch.newDimsOnly(incoming, existing, "station_no")
+      .select("station_no", "x").as[(String, Int)].collect()
+    assert(out.toSeq === Seq(("a", 1)))
+  }
 }

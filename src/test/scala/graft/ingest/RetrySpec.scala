@@ -27,4 +27,12 @@ class RetrySpec extends AnyFunSuite {
     assert(Retry.withBackoff()( { calls += 1; "ok" }) === "ok")
     assert(calls === 1)
   }
+
+  test("attempts below 1 is rejected up front, without calling fetch") {
+    var calls = 0
+    intercept[IllegalArgumentException](Retry.withBackoff(attempts = 0, backoffMs = 1) {
+      calls += 1; "never"
+    })
+    assert(calls === 0)
+  }
 }

@@ -1,6 +1,5 @@
 package graft.ml
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -217,41 +216,14 @@ class GramOlsSpec extends SparkSpec {
     assert(onFiltered.terms.forall(t => math.abs(a(key(t)) - t.coef) < 1e-9))
   }
 
-  /** Spark jobs launched while `thunk` runs (AQE may split one query
-    * into several jobs, so absolute counts are config-dependent — the
-    * ladder invariant below compares counts instead). */
-  private def jobsDuring(thunk: => Unit): Int = {
-    val starts = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
-        starts.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      thunk
-      // the listener bus posts asynchronously: wait until the count has
-      // been stable for 500 ms (deadline 5 s) instead of a fixed nap,
-      // so a lagging bus can't undercount one window and not the other
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      var last = -1
-      var stableSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-             (starts.get() != last ||
-              System.nanoTime() - stableSince < 500L * 1000 * 1000)) {
-        if (starts.get() != last) { last = starts.get(); stableSince = System.nanoTime() }
-        Thread.sleep(25)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    starts.get()
-  }
-
   test("a 3-model ladder launches no more jobs than a 1-model fit (one shared scan)") {
     lagData.count() // materialize the fixture cache outside the window
-    val one = jobsDuring {
+    // AQE may split one query into several jobs, so absolute counts are
+    // config-dependent; the ladder invariant compares counts instead
+    val one = jobsOf {
       GramOls.ladder(lagData, Seq("rate ~ district"), cats)
     }
-    val three = jobsDuring {
+    val three = jobsOf {
       val out = GramOls.ladder(lagData, Seq(
         "rate ~ district",
         "rate ~ district + hour_str",
