@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared runtime plumbing for the CLI mains (Bench/Verify/Probe/
-  * ExplainFit/BenchScale/ShufflePin/InflateSf/TimeQ/DumpPlan) — one
+  * ExplainFit/BenchScale/ShufflePin/InflateSf/DumpPlan) — one
   * definition of the local session config so a session-semantics fix
   * (e.g. a new legacy-parquet flag the fixtures need) lands everywhere
   * at once instead of drifting across copy-pasted builders. */

@@ -113,7 +113,9 @@ object Windows {
     * their global position (zipWithIndex's one extra count pass =
     * the per-partition-offset pass of the classic two-pass rank).
     * Values are identical: id = 0-based position in key order, emitted
-    * as the same non-nullable int row_number produced. */
+    * as the same non-nullable int row_number produced; past
+    * `Int.MaxValue` distinct keys the id fails with an
+    * ArithmeticException instead of wrapping. */
   def denseId(df: DataFrame, key: String, idCol: String): DataFrame = {
     val spark = df.sparkSession
     val sorted = df.select(col(key)).distinct()
@@ -123,7 +125,7 @@ object Windows {
       sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
         idCol, org.apache.spark.sql.types.IntegerType, nullable = false))
     val rows = sorted.rdd.zipWithIndex.map { case (r, i) =>
-      org.apache.spark.sql.Row(r.get(0), i.toInt)
+      org.apache.spark.sql.Row(r.get(0), Math.toIntExact(i))
     }
     spark.createDataFrame(rows, schema)
   }

@@ -44,8 +44,14 @@ import graft.ingest.EtlJob
   * Scale posture: the tick stream is one row per trigger — all real
   * work happens inside runOnce's plan, which is map-side until the
   * dedup shuffle and broadcasts the dim anti-join (see EtlJob). The
-  * scheduling layer adds no shuffle and no state beyond the rate
-  * source's offset checkpoint.
+  * tick's fact leg and existing-key read run on threads runOnce forks
+  * from the stream thread; they inherit its job group and batch id,
+  * so `stop()` cancels their jobs too, and runOnce joins them before
+  * it returns, so ticks never overlap. The sinks are called from the
+  * stream thread, `insertDims` then `appendFacts`, never concurrently;
+  * `existingDimKeys` may run before the tick's fetch. The scheduling
+  * layer adds no shuffle and no state beyond the rate source's offset
+  * checkpoint.
   */
 object ScheduledEtl {
 

@@ -98,15 +98,14 @@ class WindowsSpec extends SparkSpec {
 
   test("denseId two-pass form: exact dense ranks across MANY partitions " +
     "(r18 — no single-partition window at any key cardinality)") {
-    // enough distinct keys that the range partitioner actually splits;
-    // shuffled input order so the rank really comes from the sort
+    // shuffled input order so the rank really comes from the sort;
     // enough distinct keys that the range sort + zip really carries
     // ranks across partition boundaries when the partitioner splits
     // (at fixture size AQE may legitimately coalesce the range shuffle
     // to one partition — the scale-adaptive behavior itself; the pin
     // here is exactness of the two-pass rank, not a partition count)
     val keys = (0 until 1000).map(i => f"k$i%04d")
-    val df = scala.util.Random.shuffle(keys ++ keys.take(100)).toDF("k")
+    val df = new scala.util.Random(17).shuffle(keys ++ keys.take(100)).toDF("k")
     val got = Windows.denseId(df, "k", "idx")
       .orderBy("idx").as[(String, Int)].collect().toSeq
     assert(got === keys.sorted.zipWithIndex)
